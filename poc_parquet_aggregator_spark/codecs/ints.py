@@ -277,6 +277,11 @@ def encode_ints(a: np.ndarray, codec_id: int) -> bytes:
 # ------------------------------------------------------------------- decoders
 
 
+def _check_len(codec: str, got: int, want: int) -> None:
+    if got != want:
+        raise ValueError(f"corrupt {codec} blob: decoded {got} values, header says {want}")
+
+
 def decode_ints(blob: bytes) -> np.ndarray:
     """Decode any blob (recursively) back to an int32 array. Bit-identical."""
     codec_id = blob[0]
@@ -312,7 +317,7 @@ def decode_ints(blob: bytes) -> np.ndarray:
         (llen,) = _U32.unpack_from(body, 8 + vlen)
         lens = decode_ints(bytes(body[12 + vlen : 12 + vlen + llen]))
         out = np.repeat(vals, lens.astype(np.int64))
-        assert len(out) == n
+        _check_len("RLE", len(out), n)
         return out
     if codec_id == DICT:
         (n,) = _U32.unpack_from(body, 0)
@@ -320,12 +325,12 @@ def decode_ints(blob: bytes) -> np.ndarray:
         uniq = decode_ints(bytes(body[8 : 8 + dlen]))
         (clen,) = _U32.unpack_from(body, 8 + dlen)
         codes = decode_ints(bytes(body[12 + dlen : 12 + dlen + clen]))
-        assert len(codes) == n
+        _check_len("DICT", len(codes), n)
         return uniq[codes]
     if codec_id == DELTA:
         (n,) = _U32.unpack_from(body, 0)
         d = decode_ints(bytes(body[4:]))
-        assert len(d) == n
+        _check_len("DELTA", len(d), n)
         # wraparound cumsum: uint64 accumulate then truncate — exact inverse
         # (n·2^32 < 2^64 for any realistic chunk)
         return (np.cumsum(d.view(np.uint32), dtype=np.uint64) & 0xFFFFFFFF).astype(

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .ints import CODEC_NAMES, estimate_sizes, int_stats
+from .ints import estimate_sizes, int_stats
 
 
 def select_int_codec(a: np.ndarray) -> tuple[int, dict, dict[int, int]]:
@@ -22,12 +22,3 @@ def select_int_codec(a: np.ndarray) -> tuple[int, dict, dict[int, int]]:
     best = min(sizes, key=sizes.get)
     return best, stats, sizes
 
-
-def describe_selection(a: np.ndarray) -> dict:
-    """Human/manifest-facing record of a selection decision."""
-    best, stats, sizes = select_int_codec(a)
-    return {
-        "codec": CODEC_NAMES[best],
-        "stats": stats,
-        "estimates": {CODEC_NAMES[k]: v for k, v in sizes.items()},
-    }

@@ -168,12 +168,17 @@ def encode_token_chunk(
     return out, meta
 
 
+def _check_tok(blob: bytes) -> None:
+    if not blob or blob[0] != TOK:
+        raise ValueError("not a token chunk")
+
+
 def decode_chunk_lengths(blob: bytes) -> np.ndarray:
     """Parse ONLY the per-doc lengths stream of a token chunk — n_tok
     without touching the (much larger) value streams. This is what makes
     a lengths-only projection (read_decoded(columns=[... 'n_tok'])) skip
     ~95% of the decode work."""
-    assert blob[0] == TOK, "not a token chunk"
+    _check_tok(blob)
     mv = memoryview(blob)
     (ln,) = _U32.unpack_from(mv, 6)
     return decode_ints(unwrap_zstd(bytes(mv[10 : 10 + ln]))).astype(np.int32)
@@ -181,7 +186,7 @@ def decode_chunk_lengths(blob: bytes) -> np.ndarray:
 
 def decode_token_chunk(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
     """Inverse of encode_token_chunk → (flat int32 values, int32 lengths)."""
-    assert blob[0] == TOK, "not a token chunk"
+    _check_tok(blob)
     mv = memoryview(blob)
     (n_docs,) = _U32.unpack_from(mv, 1)
     n_groups = mv[5]

@@ -393,7 +393,8 @@ def _encode_chunk_row(
         zero_copy_only=False
     )
     # invariant from input_hint: n_tok == len(tokens); enforced at encode time
-    assert np.array_equal(n_tok.astype(np.int32), lengths), "n_tok invariant violated"
+    if not np.array_equal(n_tok.astype(np.int32), lengths):
+        raise ValueError("n_tok invariant violated: n_tok != len(tokens) in some row")
     tokens_blob, meta = encode_token_chunk(flat, lengths, zstd=zstd, zstd_level=zstd_level)
     # Arrow-native string encode: no per-row Python strings (object churn
     # collapses throughput at high task concurrency — see codecs.strings)

@@ -35,8 +35,50 @@ _BASE_CONF = {
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    # Python workers fork from a daemon that skips pyspark's per-task zip
+    # archive re-read on CPython < 3.12 (see plans/worker_daemon.py)
+    "spark.python.daemon.module": "poc_parquet_aggregator_spark.plans.worker_daemon",
 }
+
+
+def host_cores() -> int:
+    """CPUs this process may run on (its affinity mask, where the OS has one)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def host_driver_memory(total_bytes: int | None = None) -> str:
+    """Half of physical memory, in MiB, as a ``spark.driver.memory`` value.
+
+    In local mode the driver heap holds every executor too, so a fixed
+    default larger than the host gets the JVM killed mid-run."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(total_bytes // 2 // 2**20, 1024)}m"
+
+
+def session_conf(
+    cores: int | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> tuple[int, dict[str, str]]:
+    """(local[N] cores, conf) for ``get_spark``: sized from the host unless
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` or the arguments say
+    otherwise."""
+    if cores is None:
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
+    if shuffle_partitions is None:
+        # 2x cores: enough tasks to keep AQE coalescing meaningful locally;
+        # on a real cluster this is 2-3x total executor cores.
+        shuffle_partitions = max(2 * cores, 8)
+    conf = dict(_BASE_CONF)
+    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory()
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf["spark.default.parallelism"] = str(cores)
+    if extra_conf:
+        conf.update(extra_conf)
+    return cores, conf
 
 
 def get_spark(
@@ -49,20 +91,10 @@ def get_spark(
 
     ``cores`` controls local[N] parallelism — the bench harness uses this to
     evidence the two-cluster-size scaling criterion (local[8] vs local[32]).
+    Left out, it is ``SPARK_GRAFT_CPUS`` or the host's usable CPU count.
     """
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        # 2x cores: enough tasks to keep AQE coalescing meaningful locally;
-        # on a real cluster this is 2-3x total executor cores.
-        shuffle_partitions = max(2 * cores, 8)
-
+    cores, conf = session_conf(cores, shuffle_partitions, extra_conf)
     builder = SparkSession.builder.master(f"local[{cores}]").appName(app_name)
-    conf = dict(_BASE_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf["spark.default.parallelism"] = str(cores)
-    if extra_conf:
-        conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

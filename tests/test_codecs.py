@@ -54,6 +54,16 @@ def test_int_roundtrip_every_codec(name, codec):
     assert np.array_equal(out, a)
 
 
+@pytest.mark.parametrize("codec", [CI.RLE, CI.DICT, CI.DELTA])
+def test_int_decode_rejects_wrong_length_header(codec):
+    # a real error, not an assert: `python -O` must still catch a bad blob
+    blob = bytearray(encode_ints(ADVERSARIAL["alternating"], codec))
+    (n,) = CI._U32.unpack_from(blob, 1)
+    CI._U32.pack_into(blob, 1, n + 1)
+    with pytest.raises(ValueError, match="header says"):
+        decode_ints(bytes(blob))
+
+
 @pytest.mark.parametrize("name", list(ADVERSARIAL))
 def test_int_auto_and_zstd(name):
     a = ADVERSARIAL[name]

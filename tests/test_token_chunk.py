@@ -2,14 +2,17 @@
 edge cases (length-1, all-identical, int32 boundary, empty arrays)."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from poc_parquet_aggregator_spark.encode.chunk import (
+    decode_chunk_lengths,
     decode_token_chunk,
     encode_token_chunk,
 )
+from poc_parquet_aggregator_spark.encode.pipeline import _encode_chunk_row
 from poc_parquet_aggregator_spark.sources import generate_token_table
 
 
@@ -78,3 +81,25 @@ def test_property_roundtrip(docs):
     assert np.array_equal(f, flat)
     assert np.array_equal(l, lengths)
 
+
+
+# format checks are ValueErrors, not asserts, so `python -O` keeps them
+@pytest.mark.parametrize("decode", [decode_token_chunk, decode_chunk_lengths])
+def test_non_token_blob_rejected(decode):
+    blob, _ = encode_token_chunk(np.arange(6, dtype=np.int32), np.array([2, 4], np.int32))
+    for bad in (b"\x00" + blob[1:], b""):
+        with pytest.raises(ValueError, match="not a token chunk"):
+            decode(bad)
+
+
+def test_n_tok_mismatch_rejected():
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "doc_id": ["a", "b"],
+            "source": ["s", "s"],
+            "tokens": pa.array([[1, 2], [3]], pa.list_(pa.int32())),
+            "n_tok": pa.array([2, 2], pa.int32()),
+        }
+    )
+    with pytest.raises(ValueError, match="n_tok invariant"):
+        _encode_chunk_row(batch, zstd=True)
